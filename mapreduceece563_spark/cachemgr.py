@@ -1,55 +1,53 @@
-"""Session cache discipline (optimization guide §5: unpersist when done).
+"""Session cache discipline: build-once memos and per-call stages.
 
-Spark's SQL cache registry (``CacheManager``) is PLAN-KEYED and
-append-only until an explicit ``unpersist``: ``df.cache()`` registers
-the frame's canonicalized plan, and any later query — same entry next
-pass, or a different entry building the identical subtree — gets the
-materialized data substituted by ``lookupCachedData``. Two
-consequences, measured in r13/r14:
+Two primitives, one release path.
 
-- The per-call ``stage(df)`` caches below act as a session-scoped,
-  plan-keyed SHARED-STAGE layer: pass 2 of the bench re-caches the
-  identical plan and hits pass 1's entry (so min-of-N reflects
-  steady-state reuse), and entries sharing a subtree (triangle wedges,
-  dedup_minhash bands) share one materialization. The registry grows
-  per DISTINCT PLAN, not per call — bounded by the number of stage()
-  sites per (sf_dir, conf) combination. An r14 experiment that swept
-  each entry's stages at the next entry's build regressed the
-  steady-state registry total 241 -> 276 s by forcing every pass to
-  rebuild every staged frame; the reuse is the point, so stages now
-  live until an explicit release.
-- Entries accumulated across UNRELATED phases are a real tax: the
-  bench's sf0.001 warmup left ~350 stale plans + their broadcast/RDD
-  references in the session, and the r13 bench showed 5-20 s pass-1
-  spikes on innocent entries plus a uniform drift on every build
-  (lookupCachedData is a linear scan with canonicalized-plan
-  comparisons). Releasing everything right after warmup cured all of
-  it (r14: phrase_search pass-1 13.7 -> 1.5 s, wordcount-13MB
-  0.705 -> 0.29 s, drain 19.0 -> 13.7 s).
+- ``session_memo`` is the session-level reuse of shared stages across
+  related queries: a decorated builder runs once per key, keyed by
+  ``(applicationId, *args)``, and every later call in the same Spark
+  application gets the stored value. The shingle, signature, pair-stats
+  and TF stages, the streaming drain sinks, and the on-disk fixture
+  layouts are all memos. One RLock per key serializes concurrent
+  builders (the bench warms the registry from a 6-thread pool), and
+  memos nest (shingles -> signatures -> pair stats). DataFrame values
+  are persisted by the memo itself; entries from stopped applications
+  are pruned on every insert.
+- ``stage(df)`` caches a per-call, multiply-referenced frame. Spark's
+  SQL cache registry (``CacheManager``) is PLAN-KEYED: any later
+  identical build in the same session (the next bench pass, a sibling
+  entry sharing the subtree) is served from the one materialization.
+  An r14 experiment that swept each entry's stages at the next entry's
+  build regressed the steady-state registry total 241 -> 276 s by
+  forcing every pass to rebuild every staged frame; the reuse is the
+  point, so stages live until an explicit release.
 
-So the discipline is: ``stage()`` everything per-call and multiply
-referenced, ``track_memo()`` every session memo dict, and call
-``release_session_caches()`` at phase boundaries — after the bench
-warmup, between cold probes (tools/opt_probe.py --cold), in test
-teardown when a module needs a cold registry. At 100 TB the staged
-frames correspond to shared-stage tables a pipeline would write once
-and read per consumer; the release hook is the retention policy.
+Lifetimes. DataFrame values (memoized or staged) live until
+``release_session_caches()``, which unpersists and forgets them. It
+serves cold probes (tools/opt_probe.py --cold) and test teardown only:
+releasing right after the bench warmup was measured in r14 and
+reverted (bench.py records why), and the warmup's sf0.001 entries are
+plan-keyed, so they never match a timed build and leaving them is
+inert. Memos declared ``drain=True`` hold streaming drain sinks and
+are cleared by ``clear_drain_memos()``, so each bench pass re-times a
+real drain. Every other memo holds on-disk layouts or fixtures, which
+stay valid for the process.
 """
 
 from __future__ import annotations
 
-from typing import Any
+import functools
+import threading
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
 # (applicationId, DataFrame) for every staged per-call frame; released
-# (unpersisted + dropped) only by release_session_caches(). Entries
-# from stopped applications are pruned opportunistically.
+# (unpersisted + dropped) only by release_session_caches().
 _STAGED: list[tuple[str, DataFrame]] = []
+_STAGED_LOCK = threading.Lock()
 
-# Module-level memo dicts whose values hold persisted DataFrames
-# (directly, or inside tuples). Registered once at import time.
-_MEMO_DICTS: list[dict] = []
+# Every memo built by session_memo, in declaration order.
+_MEMOS: list[_SessionMemo] = []
 
 
 def _app_id(df: DataFrame) -> str:
@@ -57,6 +55,14 @@ def _app_id(df: DataFrame) -> str:
         return df.sparkSession.sparkContext.applicationId
     except Exception:
         return "?"
+
+
+def _frames(value: Any) -> list[DataFrame]:
+    if isinstance(value, DataFrame):
+        return [value]
+    if isinstance(value, tuple):
+        return [v for v in value if isinstance(v, DataFrame)]
+    return []
 
 
 def stage(df: DataFrame) -> DataFrame:
@@ -69,51 +75,147 @@ def stage(df: DataFrame) -> DataFrame:
     until release_session_caches() drops it."""
     df.cache()
     app = _app_id(df)
-    # prune references from stopped applications (pytest creates many
-    # sessions; their caches died with the session)
-    if _STAGED and _STAGED[0][0] != app:
+    with _STAGED_LOCK:
+        # frames of stopped applications died with their session
+        # (pytest creates many sessions)
         _STAGED[:] = [e for e in _STAGED if e[0] == app]
-    _STAGED.append((app, df))
+        _STAGED.append((app, df))
     return df
 
 
-def track_memo(d: dict) -> dict:
-    """Register a module-level memo dict for release_session_caches()."""
-    _MEMO_DICTS.append(d)
-    return d
+class _SessionMemo:
+    """A builder memoized per key; see ``session_memo``."""
+
+    def __init__(
+        self,
+        fn: Callable,
+        key: Callable | None,
+        valid: Callable[[Any], bool] | None,
+        persist: bool,
+        drain: bool,
+    ) -> None:
+        functools.update_wrapper(self, fn)
+        self._fn = fn
+        self._key_fn = key
+        self._valid = valid
+        self._persist = persist
+        self.drain = drain
+        self._entries: dict[tuple, Any] = {}
+        self._locks: dict[tuple, threading.RLock] = {}
+        self._mutex = threading.Lock()
+        _MEMOS.append(self)
+
+    def _key(self, args: tuple) -> tuple:
+        if self._key_fn is not None:
+            return self._key_fn(*args)
+        return (args[0].sparkContext.applicationId, *args[1:])
+
+    def _hit(self, key: tuple) -> Any:
+        value = self._entries.get(key)
+        if value is not None and (self._valid is None or self._valid(value)):
+            return value
+        return None
+
+    def __call__(self, *args: Any) -> Any:
+        key = self._key(args)
+        value = self._hit(key)
+        if value is not None:
+            return value
+        with self._mutex:
+            lock = self._locks.setdefault(key, threading.RLock())
+        with lock:
+            value = self._hit(key)
+            if value is None:
+                value = self._fn(*args)
+                if self._persist:
+                    for df in _frames(value):
+                        df.persist()
+                self._store(key, value)
+        return value
+
+    def _store(self, key: tuple, value: Any) -> None:
+        with self._mutex:
+            if self._key_fn is None:
+                for k in [k for k in self._entries if k[0] != key[0]]:
+                    del self._entries[k]
+                    self._locks.pop(k, None)
+            self._entries[key] = value
+
+    def peek(self, *args: Any) -> Any:
+        """The stored value for these call arguments, or None."""
+        return self._hit(self._key(args))
+
+    def seed(self, *args: Any, value: Any) -> None:
+        """Store a value built outside the memo (the concurrent drain
+        pool starts several memos' builds together)."""
+        self._store(self._key(args), value)
+
+    def discard(self, *args: Any) -> None:
+        """Forget the entry for these call arguments."""
+        with self._mutex:
+            self._entries.pop(self._key(args), None)
+
+    def clear(self) -> None:
+        """Forget every entry (the values are left as they are)."""
+        with self._mutex:
+            self._entries.clear()
+
+    def _pop_frames(self) -> list[DataFrame]:
+        with self._mutex:
+            held = [k for k, v in self._entries.items() if _frames(v)]
+            return [df for k in held for df in _frames(self._entries.pop(k))]
 
 
-def _iter_frames(value: Any):
-    if isinstance(value, DataFrame):
-        yield value
-    elif isinstance(value, (tuple, list)):
-        for v in value:
-            if isinstance(v, DataFrame):
-                yield v
+def session_memo(
+    fn: Callable | None = None,
+    *,
+    key: Callable | None = None,
+    valid: Callable[[Any], bool] | None = None,
+    persist: bool = True,
+    drain: bool = False,
+):
+    """Decorator: run the builder once per key and return the stored
+    value afterwards.
+
+    The key is ``(applicationId of args[0], *args[1:])``; ``key``
+    replaces it for process-lifetime fixtures that take no session.
+    ``valid(value)`` False on a hit (a layout whose directory vanished)
+    rebuilds. DataFrame values (or tuples of them) are persisted unless
+    ``persist=False`` (values that are already checkpointed).
+    ``drain=True`` marks streaming drain sinks, which
+    ``clear_drain_memos()`` forgets."""
+
+    def wrap(f: Callable) -> _SessionMemo:
+        return _SessionMemo(f, key, valid, persist, drain)
+
+    return wrap if fn is None else wrap(fn)
+
+
+def clear_drain_memos() -> None:
+    """Forget every completed streaming drain, so the next call of each
+    drain re-runs it."""
+    for memo in _MEMOS:
+        if memo.drain:
+            memo.clear()
 
 
 def release_session_caches() -> int:
     """Unpersist every tracked frame (staged per-call frames + all
-    session memos) and clear the trackers. Returns the number of
-    frames released. Path-valued fixture memos (written parquet
-    layouts) are untouched — they are disk state, not cache registry
-    entries, and stay valid for the session. Never raises: frames
-    whose SparkContext already stopped are skipped."""
+    DataFrame-valued memo entries) and forget them. Returns the number
+    of frames released. Path-valued memos (written layouts, drain
+    sinks) are untouched — they are disk state, not cache registry
+    entries. Never raises: frames whose SparkContext already stopped
+    are skipped."""
+    with _STAGED_LOCK:
+        frames = [df for _, df in _STAGED]
+        _STAGED.clear()
+    for memo in _MEMOS:
+        frames += memo._pop_frames()
     n = 0
-    staged, _STAGED[:] = list(_STAGED), []
-    for _, df in staged:
+    for df in frames:
         try:
             df.unpersist(False)
             n += 1
         except Exception:
             pass
-    for d in _MEMO_DICTS:
-        for v in list(d.values()):
-            for df in _iter_frames(v):
-                try:
-                    df.unpersist(False)
-                    n += 1
-                except Exception:
-                    pass
-        d.clear()
     return n

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import stage, track_memo
+from ..cachemgr import session_memo, stage
 from ..functions.text import words_cte_sql
 from ..sources.catalog import load_table
 from .dedup import words_array
@@ -119,23 +119,17 @@ FROM pairs GROUP BY word
 # bfs_hop_distance, link_prediction_jaccard, kcore_decomposition)
 # build the identical tokenize -> adjacent-pair -> distinct graph;
 # each used to rebuild AND separately persist it per call (leaking
-# one persisted copy per entry per session). The _SHINGLE_CACHE
+# one persisted copy per entry per session). The doc_shingle_hashes
 # contract: an intermediate edge frame, persisted once per (session,
 # sf_dir), recomputed from parquet in every fresh process — the
 # in-session analogue of the materialized edge table every graph
 # consumer would read at cluster scale.
-_COOC_EDGE_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+@session_memo
 def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct symmetric adjacent-word edges (src, dst), no
     self-loops. The undirected co-occurrence graph, materialized as
     both directed arcs so out-degree == degree; persisted once per
     (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _COOC_EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
     arr = _doc_word_arrays(spark, sf_dir)
     n = F.size(F.col("ws"))
     pairs = F.when(
@@ -153,11 +147,9 @@ def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
     )
-    out = e.union(
+    return e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
-    _COOC_EDGE_CACHE[key] = out
-    return out
+    ).distinct()
 
 
 def pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import stage, track_memo
+from ..cachemgr import session_memo, stage
 from ..sources.catalog import load_table
 
 N_BINS = 20
@@ -439,30 +439,24 @@ COPURCHASE_TOP = 20
 # entries (copurchase_pairs, copurchase_degree_distribution,
 # degree_assortativity, label_propagation_2iter) start from the
 # identical distinct-basket self-join over lineitem; each used to
-# rebuild it per call (~1.4 s at sf0.1). The _SHINGLE_CACHE
+# rebuild it per call (~1.4 s at sf0.1). The dedup.doc_shingle_hashes
 # contract: an intermediate frame (pre-threshold, pre-top-k, pre-
 # degree — not any registered result), persisted once per (session,
 # sf_dir), recomputed from parquet in every fresh process. At
 # cluster scale the equivalent is the materialized co-purchase edge
 # table every graph consumer reads.
-_BASKET_PAIR_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+@session_memo
 def order_part_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pa, pb, n) with pa < pb: for every part pair, the number of
     order baskets containing both (baskets deduplicated to distinct
     part sets first); persisted once per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BASKET_PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    out = (
+    return (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -473,10 +467,7 @@ def order_part_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.l_partkey").alias("pb"),
         )
         .agg(F.count("*").alias("n"))
-        .persist()
     )
-    _BASKET_PAIR_CACHE[key] = out
-    return out
 
 
 def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,23 +948,12 @@ FROM diff GROUP BY change_type
 
 IVM_CUTOFF = "1997-01-01"  # rows at/after this date are "the delta"
 
-# (appId, sf_dir) -> path of the materialized base aggregate
-_IVM_VIEW_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_ivm() -> None:
-    _IVM_VIEW_CACHE.clear()
-
-
+@session_memo
 def _ivm_base_view(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the pre-cutoff monthly aggregate ONCE per
     (application, sf_dir) — the stored view an incremental refresh
     maintains. Subsequent refreshes read THIS parquet, never the
     base fact rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVM_VIEW_CACHE.get(key)
-    if hit is not None:
-        return hit
     import os
     import tempfile
 
@@ -992,7 +972,6 @@ def _ivm_base_view(spark: SparkSession, sf_dir: str) -> str:
         )
     )
     base.write.mode("overwrite").parquet(path)
-    _IVM_VIEW_CACHE[key] = path
     return path
 
 

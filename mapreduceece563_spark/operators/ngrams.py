@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import stage, track_memo
+from ..cachemgr import session_memo, stage
 from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL
 from ..sources.catalog import load_table
 from .dedup import words_array
@@ -39,22 +39,12 @@ def _words_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row per (doc, word)). Persisting it once per session mirrors the
 # shingle-stage cache in operators/dedup.py; the cluster equivalent is
 # a materialized term-frequency table.
-_TF_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+@session_memo
 def _tf_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TF_CACHE.get(key)
-    if cached is not None:
-        return cached
     tokens = _words_per_doc(spark, sf_dir).select(
         "doc_id", F.explode("words").alias("word")
     )
-    tf = tokens.groupBy("doc_id", "word").agg(
-        F.count("*").alias("tf")
-    ).persist()
-    _TF_CACHE[key] = tf
-    return tf
+    return tokens.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
 
 
 # (app_id, sf_dir) -> persisted (doc_id, word, tf) over 3-word
@@ -67,14 +57,8 @@ def _tf_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ~27k dims with max df 25/5000 at sf0.1, restoring the
 # discrimination the pruning depends on — and w-shingles are the
 # standard document near-dup representation anyway.
-_SHINGLE_TF_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+@session_memo
 def _shingle_tf_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_TF_CACHE.get(key)
-    if cached is not None:
-        return cached
     w = _words_per_doc(spark, sf_dir)
     n = F.size(F.col("words"))
     grams = F.when(
@@ -90,11 +74,7 @@ def _shingle_tf_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).otherwise(F.array().cast("array<string>"))
     tokens = w.select("doc_id", F.explode(grams).alias("word"))
-    tf = tokens.groupBy("doc_id", "word").agg(
-        F.count("*").alias("tf")
-    ).persist()
-    _SHINGLE_TF_CACHE[key] = tf
-    return tf
+    return tokens.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
 
 
 def _n_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,7 +1142,7 @@ def allpairs_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     The feature space is w=3 shingles, not unigrams, for two reasons:
     (1) word shingles are the standard near-dup representation (order
     sensitivity); (2) pruning needs dimensionality — see the
-    _SHINGLE_TF_CACHE note for the measured unigram/bigram
+    _shingle_tf_stage note for the measured unigram/bigram
     degeneration on this corpus.
 
     Canonical term order is (df ASC, word) — rarest first. A doc's
@@ -1491,11 +1471,10 @@ SURPRISAL_KEEP_PCTS = (10, 20, 30, 40, 50, 60, 70, 80, 90)
 
 # (app_id, sf_dir) -> eagerly materialized per-doc (v, n_bigrams)
 # surprisal score frame for the curve (one row per doc, two ints) —
-# the _SHINGLE_CACHE contract; doc_lm_surprisal itself stays
-# unmemoized and recomputes its scoring pass per call.
-_SURPRISAL_SCORE_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+# the dedup.doc_shingle_hashes contract; doc_lm_surprisal itself stays
+# unmemoized and recomputes its scoring pass per call. Already
+# checkpointed, so the memo does not persist it again.
+@session_memo(persist=False)
 def _surprisal_score_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_lm_surprisal(spark, sf_dir).select(
         F.round(F.col("avg_surprisal") * 1_000_000, 0)
@@ -1534,14 +1513,9 @@ def surprisal_filter_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncached, the whole doc_lm_surprisal scoring pipeline
     # (tokenize + bigram LM + score-back joins) re-ran twice
     # (6 parquet scans in the before-plan). One row per doc, two
-    # ints. The memo (keyed like _SHINGLE_CACHE) also spares the
-    # curve rebuilding the scoring pass on every call;
-    # doc_lm_surprisal itself stays unmemoized.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    s = _SURPRISAL_SCORE_CACHE.get(key)
-    if s is None:
-        s = _surprisal_score_frame(spark, sf_dir)
-        _SURPRISAL_SCORE_CACHE[key] = s
+    # ints. The memo also spares the curve rebuilding the scoring
+    # pass on every call; doc_lm_surprisal itself stays unmemoized.
+    s = _surprisal_score_frame(spark, sf_dir)
     hist = s.groupBy("v").agg(
         F.count(F.lit(1)).alias("_d"), F.sum("n_bigrams").alias("_m")
     )

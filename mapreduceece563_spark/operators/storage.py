@@ -63,15 +63,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cachemgr import session_memo
 from ..sources.catalog import load_table
 from .relational import _cents, _cents_sql
 
 N_BUCKETS = 8
-
-# (applicationId, sf_dir) -> (orders_table, lineitem_table) names
-_BUCKET_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-# (applicationId, sf_dir) -> partitioned-events path
-_PART_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _tag(spark: SparkSession, sf_dir: str) -> str:
@@ -85,14 +81,11 @@ def _scratch(spark: SparkSession, sf_dir: str, kind: str) -> str:
     )
 
 
+@session_memo
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders + lineitem bucketed/sorted by the join key, once
     per (session, sf). Only the joined columns are written — column
     pruning at ingest, not just at read."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BUCKET_CACHE.get(key)
-    if cached is not None:
-        return cached
     tag = _tag(spark, sf_dir)
     bo, bl = f"b_orders_{tag}", f"b_lineitem_{tag}"
     (
@@ -115,7 +108,6 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .mode("overwrite")
         .saveAsTable(bl)
     )
-    _BUCKET_CACHE[key] = (bo, bl)
     return bo, bl
 
 
@@ -156,12 +148,9 @@ GROUP BY o.o_orderpriority
 """
 
 
+@session_memo
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Write events partitioned by event_type, once per (session, sf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PART_CACHE.get(key)
-    if cached is not None:
-        return cached
     path = _scratch(spark, sf_dir, "events_by_type")
     (
         load_table(spark, sf_dir, "events")
@@ -170,7 +159,6 @@ def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
         .mode("overwrite")
         .parquet(path)
     )
-    _PART_CACHE[key] = path
     return path
 
 
@@ -574,26 +562,6 @@ def _count_parquet_files(root: str) -> int:
     )
 
 
-# (appId, sf_dir) -> (base_dir, final_dir, n_base_files, n_final_files)
-_MERGE_CACHE: dict[tuple[str, str], tuple[str, str, int, int]] = {}
-
-# The layout writes are check-then-act memos, and bench.py warms the
-# batch registry from a 6-thread pool: two storage-family entries
-# racing the same (app, sf) key used to both start the overwrite,
-# one deleting bucket dirs the other was reading (observed r13:
-# FileNotFoundException on merge_base/bucket=22 under a concurrent
-# warmup). One lock serializes the builds; the double-check keeps
-# the warm path lock-free... (builders re-check under the lock).
-import threading as _threading
-
-_MERGE_LOCK = _threading.Lock()
-_VACUUM_LOCK = _threading.Lock()
-
-
-def reset_merge_tables() -> None:
-    _MERGE_CACHE.clear()
-
-
 def _merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -624,6 +592,7 @@ def _merge_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return upd.unionByName(dele).unionByName(ins)
 
 
+@session_memo(valid=lambda layout: os.path.isdir(layout[0]))
 def _merge_tables(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str, int, int]:
@@ -631,21 +600,8 @@ def _merge_tables(
     rewrite (v2) ONCE per (session, sf) — the bucketed-tables
     precedent: a real deployment writes the layout once and amortizes
     it; re-invocations (bench passes, the time-travel entry) read the
-    same versions a table format would serve from its manifest list."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MERGE_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached[0]):
-        return cached
-    with _MERGE_LOCK:
-        cached = _MERGE_CACHE.get(key)
-        if cached is not None and os.path.isdir(cached[0]):
-            return cached
-        return _merge_tables_build(spark, sf_dir, key)
-
-
-def _merge_tables_build(
-    spark: SparkSession, sf_dir: str, key: tuple[str, str]
-) -> tuple[str, str, int, int]:
+    same versions a table format would serve from its manifest list.
+    Returns (base_dir, final_dir, n_base_files, n_final_files)."""
     base_dir = _scratch(spark, sf_dir, "merge_base")
     final_dir = _scratch(spark, sf_dir, "merge_final")
     cutoff = F.lit(MERGE_CUTOFF).cast("timestamp")
@@ -686,9 +642,7 @@ def _merge_tables_build(
         .parquet(final_dir)
     )
     n_final_files = _count_parquet_files(final_dir)
-    result = (base_dir, final_dir, n_base_files, n_final_files)
-    _MERGE_CACHE[key] = result
-    return result
+    return base_dir, final_dir, n_base_files, n_final_files
 
 
 def merge_compaction_roundtrip(
@@ -1101,14 +1055,7 @@ FROM answer
 
 # --- vacuum / orphan-file GC planning (round-14 queue) ------------------
 
-# (appId, sf_dir) -> manifest_dir
-_VACUUM_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_vacuum_manifest() -> None:
-    _VACUUM_CACHE.clear()
-
-
+@session_memo(valid=os.path.isdir)
 def _vacuum_manifest_dir(spark: SparkSession, sf_dir: str) -> str:
     """Persist the live-file manifest ONCE per (session, sf): the list
     of file names the compacted generation owns — exactly what a table
@@ -1125,37 +1072,25 @@ def _vacuum_manifest_dir(spark: SparkSession, sf_dir: str) -> str:
     disk. The merge write pins one file per occupied bucket and
     parquet never writes a zero-row part file, so the distinct
     file_path set IS the directory's file set."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _VACUUM_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
     _, final_dir, _, _ = _merge_tables(spark, sf_dir)
-    # serialize concurrent builders (the bench warmup pool — same
-    # overwrite race as _MERGE_LOCK, see there); taken AFTER the
-    # _merge_tables call so the two locks never nest
-    with _VACUUM_LOCK:
-        cached = _VACUUM_CACHE.get(key)
-        if cached is not None and os.path.isdir(cached):
-            return cached
-        # manifest keys are "<partition dir>/<file>" — basenames alone
-        # collide across partition directories (one write task serves
-        # several partition values and reuses its part-number prefix)
-        manifest_dir = _scratch(spark, sf_dir, "vacuum_manifest")
-        (
-            spark.read.schema("k long, cents long, cbucket int")
-            .parquet(final_dir)
-            .select(
-                F.regexp_extract(
-                    F.col("_metadata.file_path"), r"([^/]+/[^/]+)$", 1
-                ).alias("file_name")
-            )
-            .distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(manifest_dir)
+    # manifest keys are "<partition dir>/<file>" — basenames alone
+    # collide across partition directories (one write task serves
+    # several partition values and reuses its part-number prefix)
+    manifest_dir = _scratch(spark, sf_dir, "vacuum_manifest")
+    (
+        spark.read.schema("k long, cents long, cbucket int")
+        .parquet(final_dir)
+        .select(
+            F.regexp_extract(
+                F.col("_metadata.file_path"), r"([^/]+/[^/]+)$", 1
+            ).alias("file_name")
         )
-        _VACUUM_CACHE[key] = manifest_dir
-        return manifest_dir
+        .distinct()
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(manifest_dir)
+    )
+    return manifest_dir
 
 
 def vacuum_orphan_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cachemgr import stage, track_memo
+from ..cachemgr import session_memo, stage
 from ..functions.hashing import poly_hash, poly_hash_sql
 from ..functions.text import MAX_WORD_LEN, NORMALIZE_SQL
 from ..sources.catalog import load_table
@@ -162,27 +162,21 @@ FROM h
 # (~0.28 s isolated at sf0.1) per call — and often several times per
 # call before their own frames were staged. The counts frame is an
 # INTERMEDIATE (doc_id + four int64 counts, pre-ratio, pre-score):
-# the _SHINGLE_CACHE contract — persisted once per (session,
+# the dedup.doc_shingle_hashes contract — persisted once per (session,
 # sf_dir), recomputed from parquet in every fresh process. At
 # cluster scale the equivalent is a materialized per-doc feature
 # table read by every audit query.
-_QCOUNT_CACHE: dict[tuple[str, str], DataFrame] = track_memo({})
-
-
+@session_memo
 def quality_feature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, n_stopwords, n_chars, alpha_chars) integer
     feature counts in one map pass; persisted once per (session,
     sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _QCOUNT_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     docs = docs.select(
         "doc_id", "text", words_array(F.col("text")).alias("_words")
     )
     words = F.col("_words")
-    out = docs.select(
+    return docs.select(
         "doc_id",
         F.size(words).cast("long").alias("n_tokens"),
         F.size(
@@ -192,9 +186,7 @@ def quality_feature_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(
             F.regexp_replace(F.lower(F.col("text")), "[^a-z]", "")
         ).cast("long").alias("alpha_chars"),
-    ).persist()
-    _QCOUNT_CACHE[key] = out
-    return out
+    )
 
 
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..cachemgr import session_memo
+
 TABLES = (
     "region",
     "nation",
@@ -25,7 +27,7 @@ TABLES = (
 )
 
 
-# (appId, sf_dir, name) -> raw parquet read schema (DDL string). The
+# Raw parquet read schema (DDL string) per (appId, sf_dir, name). The
 # expensive part of spark.read.parquet is the footer schema inference
 # over py4j (~0.1 s per table per query build, ~0.5 s of the q9 bench
 # number was five of these) — so cache ONLY the schema and rebuild a
@@ -35,14 +37,9 @@ TABLES = (
 # loads into same-object self-joins that only worked through Spark's
 # DeduplicateRelations (ADVICE r5, medium). Keyed by applicationId so
 # fresh test sessions re-infer.
-_SCHEMA_CACHE: dict[tuple[str, str, str], str] = {}
-
-
-def invalidate_table_cache() -> None:
-    """Drop every cached schema and narrowness verdict (call after
-    rewriting a table's parquet in place within one session)."""
-    _SCHEMA_CACHE.clear()
-    _NARROW_CACHE.clear()
+@session_memo
+def _schema_ddl(spark: SparkSession, sf_dir: str, name: str) -> str:
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema.toDDL()
 
 
 def load_table(
@@ -64,12 +61,6 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    app = spark.sparkContext.applicationId
-    # evict entries from other (stopped) applications so dead-JVM keys
-    # don't accumulate for the process lifetime (pytest creates many
-    # sessions)
-    for stale in [k for k in _SCHEMA_CACHE if k[0] != app]:
-        del _SCHEMA_CACHE[stale]
     if name == "events":
         df = _load_events(spark, sf_dir)
     else:
@@ -77,12 +68,6 @@ def load_table(
     if spread and _scan_is_narrow(spark, sf_dir, name):
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
-
-
-# (appId, sf_dir, name) -> whether the table's scan needs the spread
-# (fewer estimated splits than cores). One os.stat pass per table per
-# session — the same metadata a real catalog serves without listing.
-_NARROW_CACHE: dict[tuple[str, str, str], bool] = {}
 
 
 def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
@@ -101,6 +86,7 @@ def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
         return default
 
 
+@session_memo
 def _scan_is_narrow(spark: SparkSession, sf_dir: str, name: str) -> bool:
     """True when the parquet scan will plan FEWER splits than the
     session's default parallelism, i.e. a downstream CPU-heavy map
@@ -108,12 +94,11 @@ def _scan_is_narrow(spark: SparkSession, sf_dir: str, name: str) -> bool:
     mirrors Spark's packing rule: each file contributes
     ceil(size / maxPartitionBytes) splits (openCostInBytes padding
     only matters for many-tiny-file layouts, where the estimate is
-    already >= cores or the spread is moot)."""
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    cached = _NARROW_CACHE.get(key)
-    if cached is not None:
-        return cached
+    already >= cores or the spread is moot). Fails closed: a path
+    with no listable parquet file (an object store, a missing
+    directory) is NOT narrow, so no spread fires on a listing this
+    check cannot see. One os.stat pass per table per session — the
+    same metadata a real catalog serves without listing."""
     import glob as _glob
     import os as _os
 
@@ -123,6 +108,8 @@ def _scan_is_narrow(spark: SparkSession, sf_dir: str, name: str) -> bool:
         if _os.path.isfile(path)
         else _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
     )
+    if not files:
+        return False
     max_bytes = _bytes_conf(
         spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
     )
@@ -132,23 +119,14 @@ def _scan_is_narrow(spark: SparkSession, sf_dir: str, name: str) -> bool:
             splits += max(1, -(-_os.path.getsize(f) // max_bytes))
         except OSError:
             splits += 1
-    narrow = splits < spark.sparkContext.defaultParallelism
-    _NARROW_CACHE[key] = narrow
-    return narrow
+    return splits < spark.sparkContext.defaultParallelism
 
 
 def _read_with_cached_schema(
     spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    path = f"{sf_dir}/{name}.parquet"
-    ddl = _SCHEMA_CACHE.get(key)
-    if ddl is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema.toDDL()
-        return df
-    return spark.read.schema(ddl).parquet(path)
+    ddl = _schema_ddl(spark, sf_dir, name)
+    return spark.read.schema(ddl).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

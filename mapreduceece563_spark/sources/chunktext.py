@@ -41,6 +41,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..cachemgr import session_memo
+
 CHUNK_PREFIX = "chunk_"
 CHUNK_SUFFIX = ".txt"
 
@@ -233,9 +235,9 @@ def register_chunktext(spark) -> None:
 # --- deterministic chunk-corpus fixture -------------------------------
 
 N_CHUNKS = 8
-_CHUNK_CACHE: dict[str, str] = {}
 
 
+@session_memo(key=lambda sf_dir: (sf_dir,), valid=os.path.isdir)
 def chunked_corpus_dir(sf_dir: str) -> str:
     """Write (once per process) the documents table as N_CHUNKS text
     chunk files, doc assigned to chunk doc_id % N_CHUNKS, docs in
@@ -243,9 +245,6 @@ def chunked_corpus_dir(sf_dir: str) -> str:
     corpus layout, with a deterministic assignment both engines can
     reproduce in SQL. Fixture prep (like spill_chunks), not part of
     any timed query; pyarrow keeps it off the Spark driver."""
-    cached = _CHUNK_CACHE.get(sf_dir)
-    if cached and os.path.isdir(cached):
-        return cached
     import tempfile
 
     import pyarrow.parquet as pq
@@ -300,7 +299,6 @@ def chunked_corpus_dir(sf_dir: str) -> str:
     finally:
         for h in handles:
             h.close()
-    _CHUNK_CACHE[sf_dir] = out
     return out
 
 
@@ -683,12 +681,63 @@ ChunkTextDataSource.streamReader = _stream_reader
 ChunkTextDataSource.simpleStreamReader = _simple_stream_reader
 
 
-# (appId, sf_dir) -> partials dir of the streaming run
-_STREAM_WC_CACHE: dict[tuple[str, str], str] = {}
+@session_memo(drain=True)
+def _stream_wc_drain(spark, sf_dir: str) -> str:
+    """Drain the chunked corpus through the custom source's
+    micro-batch reader; returns the partials dir."""
+    import shutil
 
+    from pyspark.sql import functions as F
 
-def reset_stream_wc() -> None:
-    _STREAM_WC_CACHE.clear()
+    from ..functions.text import tokenize_lines
+    from ..streaming.wordcount_stream import _fresh_workdir
+
+    src = chunked_corpus_dir(sf_dir)
+    work = _fresh_workdir("chunktext_stream", sf_dir)
+    sink = os.path.join(work, "partials")
+    os.makedirs(sink, exist_ok=True)
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        lines = (
+            spark.readStream.format("chunktext")
+            .option("path", src)
+            # the rate-limited driver-prefetch reader: its
+            # read(start) is handed the checkpointed offset by the
+            # engine, so bounded 2-chunk batches (the reference's
+            # task-farm doling, >1 micro-batch per drain) are
+            # restart-safe. The default distributed reader takes
+            # everything available per trigger (restart-correct by
+            # pure-function offsets; see ChunkTextStreamReader).
+            .option("reader", "driver-prefetch")
+            .load()
+            .select(F.col("text"))
+        )
+        counts = tokenize_lines(lines).groupBy("word").agg(
+            F.count("*").alias("cnt")
+        )
+
+        def sink_fn(batch_df, batch_id: int) -> None:
+            batch_df.write.mode("overwrite").parquet(
+                os.path.join(sink, f"batch_id={batch_id}")
+            )
+
+        q = (
+            counts.writeStream.foreachBatch(sink_fn)
+            .outputMode("update")
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .start()
+        )
+        # processAllAvailable drives micro-batches until the
+        # source's offset stops advancing — the multi-batch drain
+        # for a custom source (availableNow is file-source only).
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
+    return sink
 
 
 def streaming_wordcount_via_datasource(spark, sf_dir: str):
@@ -699,65 +748,12 @@ def streaming_wordcount_via_datasource(spark, sf_dir: str):
     replay), the same tokenize chain, update-mode counts persisted
     per batch_id and reduced last-writer-wins — hash-equal to the
     batch WORDCOUNT_SQL oracle."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from ..functions.text import tokenize_lines
-    from ..streaming.wordcount_stream import _fresh_workdir, _partial_files
+    from ..streaming.wordcount_stream import _partial_files
 
     register_chunktext(spark)
-    src = chunked_corpus_dir(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sink = _STREAM_WC_CACHE.get(key)
-    if sink is None:
-        work = _fresh_workdir("chunktext_stream", sf_dir)
-        sink = os.path.join(work, "partials")
-        os.makedirs(sink, exist_ok=True)
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            lines = (
-                spark.readStream.format("chunktext")
-                .option("path", src)
-                # the rate-limited driver-prefetch reader: its
-                # read(start) is handed the checkpointed offset by the
-                # engine, so bounded 2-chunk batches (the reference's
-                # task-farm doling, >1 micro-batch per drain) are
-                # restart-safe. The default distributed reader takes
-                # everything available per trigger (restart-correct by
-                # pure-function offsets; see ChunkTextStreamReader).
-                .option("reader", "driver-prefetch")
-                .load()
-                .select(F.col("text"))
-            )
-            counts = tokenize_lines(lines).groupBy("word").agg(
-                F.count("*").alias("cnt")
-            )
-
-            def sink_fn(batch_df, batch_id: int) -> None:
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(sink, f"batch_id={batch_id}")
-                )
-
-            q = (
-                counts.writeStream.foreachBatch(sink_fn)
-                .outputMode("update")
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .start()
-            )
-            # processAllAvailable drives micro-batches until the
-            # source's offset stops advancing — the multi-batch drain
-            # for a custom source (availableNow is file-source only).
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-        _STREAM_WC_CACHE[key] = sink
+    sink = _stream_wc_drain(spark, sf_dir)
     if not _partial_files(sink):
         return spark.createDataFrame([], "word STRING, cnt BIGINT")
     emissions = spark.read.parquet(sink)

@@ -33,17 +33,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cachemgr import session_memo
 from ..operators.relational import _cents
 from ..sources.catalog import load_table
 from .wordcount_stream import _fresh_workdir, spill_chunks
-
-# (applicationId, sf_dir) -> updates dir of the finished drain
-_ENRICH_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_enrich() -> None:
-    _ENRICH_CACHE.clear()
-
 
 def _start_enrich(spark: SparkSession, sf_dir: str):
     """Build the fixture and START the enrichment query without
@@ -97,15 +90,11 @@ def _start_enrich(spark: SparkSession, sf_dir: str):
     return q, work, sink
 
 
+@session_memo(drain=True)
 def _enrich_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ENRICH_CACHE.get(key)
-    if hit is not None:
-        return hit
     q, work, sink = _start_enrich(spark, sf_dir)
     q.awaitTermination()
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _ENRICH_CACHE[key] = sink
     return sink
 
 

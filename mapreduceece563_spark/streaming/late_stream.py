@@ -42,6 +42,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cachemgr import session_memo
 from ..sources.catalog import load_table
 
 N_LATE_CHUNKS = 6
@@ -52,59 +53,49 @@ LATE_PERM = (0, 3, 1, 4, 2, 5)
 LATE_DELAY_MS = 2 * 3600 * 1000  # withWatermark("ts", "2 hours")
 HOUR_US = 3600 * 1_000_000
 
-# Pool membership switch: False until the entry REGISTERS (flip in
-# the registration commit) so the shared __drain__ line never pays
-# for a drain no registered entry consumes. The solo _late_drain
-# path works either way.
-POOL_ENABLED = False
 
-# (appId, sf_dir) -> updates dir of the finished drain
-_LATE_CACHE: dict[tuple[str, str], str] = {}
-# (appId, sf_dir) -> src chunk dir; deterministic input layout, kept
-# out of reset() like _SESSION_SRC_CACHE
-_LATE_SRC_CACHE: dict[tuple[str, str], str] = {}
+# Deterministic input layout, not a drain memo, like the session
+# window source.
+@session_memo
+def _late_source(spark: SparkSession, sf_dir: str) -> str:
+    """Write the out-of-order chunk replay; returns the src dir."""
+    from .wordcount_stream import ReplayOrder, _fresh_workdir
 
-
-def reset_late_stream() -> None:
-    _LATE_CACHE.clear()
+    src = os.path.join(_fresh_workdir("late_audit_src", sf_dir), "src")
+    os.makedirs(src, exist_ok=True)
+    ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
+    bounds = ev.agg(
+        F.unix_micros(F.min("ts")).alias("lo"),
+        F.unix_micros(F.max("ts")).alias("hi"),
+    ).first()
+    lo, hi = bounds["lo"], bounds["hi"]
+    order = ReplayOrder(src)
+    if lo is not None:
+        span = max(1, (hi - lo) + 1)
+        us = F.unix_micros(F.col("ts"))
+        for k in LATE_PERM:
+            a = lo + (span * k) // N_LATE_CHUNKS
+            b = lo + (span * (k + 1)) // N_LATE_CHUNKS
+            (
+                ev.filter((us >= a) & (us < b))
+                .coalesce(1)
+                .write.mode("append")
+                .parquet(src)
+            )
+            order.mark(src)
+    return src
 
 
 def _start_late(spark: SparkSession, sf_dir: str):
-    """Fixture + START (no await): the shared_drain.
-    drain_round7_streams pool-member contract. Returns
-    (query, work dir, sink dir)."""
-    from .wordcount_stream import ReplayOrder, _fresh_workdir
+    """Fixture + START (no await). Returns (query, work dir, sink
+    dir)."""
+    from .wordcount_stream import _fresh_workdir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
     work = _fresh_workdir("late_audit", sf_dir)
     sink = os.path.join(work, "updates")
     os.makedirs(sink, exist_ok=True)
 
-    src = _LATE_SRC_CACHE.get(key)
-    if src is None:
-        src = os.path.join(_fresh_workdir("late_audit_src", sf_dir), "src")
-        os.makedirs(src, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
-        bounds = ev.agg(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-        order = ReplayOrder(src)
-        if lo is not None:
-            span = max(1, (hi - lo) + 1)
-            us = F.unix_micros(F.col("ts"))
-            for k in LATE_PERM:
-                a = lo + (span * k) // N_LATE_CHUNKS
-                b = lo + (span * (k + 1)) // N_LATE_CHUNKS
-                (
-                    ev.filter((us >= a) & (us < b))
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(src)
-                )
-                order.mark(src)
-        _LATE_SRC_CACHE[key] = src
+    src = _late_source(spark, sf_dir)
 
     stream = (
         spark.readStream.schema("ts TIMESTAMP, event_type STRING")
@@ -136,11 +127,8 @@ def _start_late(spark: SparkSession, sf_dir: str):
     return q, work, sink
 
 
+@session_memo(drain=True)
 def _late_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LATE_CACHE.get(key)
-    if hit is not None:
-        return hit
     from .shared_drain import _PARTS_PINNED
 
     pinned = _PARTS_PINNED
@@ -155,7 +143,6 @@ def _late_drain(spark: SparkSession, sf_dir: str) -> str:
         if not pinned:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _LATE_CACHE[key] = sink
     return sink
 
 

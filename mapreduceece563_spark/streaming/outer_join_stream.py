@@ -37,21 +37,11 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cachemgr import session_memo
 from ..sources.catalog import load_table
 from .join_stream import JOIN_WINDOW_MIN, N_JOIN_CHUNKS, _write_time_ordered_chunks
 
 OUTER_SENTINELS = ("2030-01-01 00:00:00", "2030-01-02 00:00:00")
-
-# (appId, sf_dir) -> joined-rows partials dir
-_OUTER_CACHE: dict[tuple[str, str], str] = {}
-# (appId, sf_dir) -> (purchases dir, views dir); fixture layout, kept
-# out of reset() like the sibling drains
-_OUTER_SRC_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
-def reset_outer_join() -> None:
-    _OUTER_CACHE.clear()
-
 
 def _append_sentinels(spark: SparkSession, dest: str) -> None:
     from .wordcount_stream import ReplayOrder
@@ -74,50 +64,55 @@ def _append_sentinels(spark: SparkSession, dest: str) -> None:
         order.mark(dest)
 
 
+# Fixture layout, not a drain memo, like the sibling drains.
+@session_memo
+def _outer_join_sources(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Write the (purchases dir, views dir) chunk layouts, sentinels
+    appended."""
+    from .wordcount_stream import _fresh_workdir
+
+    src_work = _fresh_workdir("stream_outer_src", sf_dir)
+    p_src = os.path.join(src_work, "purchases")
+    v_src = os.path.join(src_work, "views")
+    for d in (p_src, v_src):
+        os.makedirs(d, exist_ok=True)
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+    bounds = ev.agg(
+        F.unix_micros(F.min("ts")).alias("lo"),
+        F.unix_micros(F.max("ts")).alias("hi"),
+    ).first()
+    if bounds["lo"] is not None:
+        _write_time_ordered_chunks(
+            ev.filter(F.col("event_type") == "purchase").select(
+                "user_id", "ts", "event_id"
+            ),
+            p_src, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
+        )
+        _write_time_ordered_chunks(
+            ev.filter(F.col("event_type") == "view").select(
+                "user_id", "ts", "event_id"
+            ),
+            v_src, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
+        )
+    _append_sentinels(spark, p_src)
+    _append_sentinels(spark, v_src)
+    return p_src, v_src
+
+
 def _start_outer_join(spark: SparkSession, sf_dir: str):
     """Fixture + START (no await, no conf fiddling — caller pins
     spark.sql.shuffle.partitions around the start). Returns
     (query, work dir, sink dir). See shared_drain.
     drain_round7_streams for the concurrent-drain consolidation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
     from .wordcount_stream import _fresh_workdir
 
     work = _fresh_workdir("stream_outer_join", sf_dir)
     sink = os.path.join(work, "rows")
     os.makedirs(sink, exist_ok=True)
 
-    srcs = _OUTER_SRC_CACHE.get(key)
-    if srcs is None:
-        src_work = _fresh_workdir("stream_outer_src", sf_dir)
-        p_src = os.path.join(src_work, "purchases")
-        v_src = os.path.join(src_work, "views")
-        for d in (p_src, v_src):
-            os.makedirs(d, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events").select(
-            "user_id", "ts", "event_id", "event_type"
-        )
-        bounds = ev.agg(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).first()
-        if bounds["lo"] is not None:
-            _write_time_ordered_chunks(
-                ev.filter(F.col("event_type") == "purchase").select(
-                    "user_id", "ts", "event_id"
-                ),
-                p_src, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
-            )
-            _write_time_ordered_chunks(
-                ev.filter(F.col("event_type") == "view").select(
-                    "user_id", "ts", "event_id"
-                ),
-                v_src, bounds["lo"], bounds["hi"], N_JOIN_CHUNKS,
-            )
-        _append_sentinels(spark, p_src)
-        _append_sentinels(spark, v_src)
-        _OUTER_SRC_CACHE[key] = (p_src, v_src)
-    else:
-        p_src, v_src = srcs
+    p_src, v_src = _outer_join_sources(spark, sf_dir)
 
     schema = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT"
     p = (
@@ -169,11 +164,8 @@ def _start_outer_join(spark: SparkSession, sf_dir: str):
     return q, work, sink
 
 
+@session_memo(drain=True)
 def _outer_join_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _OUTER_CACHE.get(key)
-    if hit is not None:
-        return hit
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -182,7 +174,6 @@ def _outer_join_drain(spark: SparkSession, sf_dir: str) -> str:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _OUTER_CACHE[key] = sink
     return sink
 
 

@@ -40,16 +40,9 @@ from ..operators.analytics import (
     PSI_N_BINS,
     _psi_from_cells,
 )
+from ..cachemgr import session_memo
 from ..sources.catalog import load_table
 from .wordcount_stream import _fresh_workdir, _partial_files, spill_chunks
-
-# (appId, sf_dir) -> updates dir of the finished drain
-_PSI_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_psi_stream() -> None:
-    _PSI_CACHE.clear()
-
 
 def _bin_expr():
     return F.least(
@@ -102,15 +95,11 @@ def _start_psi(spark: SparkSession, sf_dir: str):
     return q, work, sink
 
 
+@session_memo(drain=True)
 def _psi_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PSI_CACHE.get(key)
-    if hit is not None:
-        return hit
     q, work, sink = _start_psi(spark, sf_dir)
     q.awaitTermination()
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _PSI_CACHE[key] = sink
     return sink
 
 

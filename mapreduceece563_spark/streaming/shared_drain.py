@@ -14,8 +14,8 @@ signal is unchanged, only the wall-clock overlap is new.
 
 The drain is memoized per (application, sf_dir): the first of the
 three entries to run in a pass executes it, the other two find their
-sinks already written. ``reset()`` clears the memo; bench.py calls it
-between passes so every pass re-measures a real drain.
+sinks already written. ``reset()`` clears every drain memo; bench.py
+calls it between passes so every pass re-measures a real drain.
 """
 
 from __future__ import annotations
@@ -27,13 +27,11 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cachemgr import clear_drain_memos, session_memo
 from ..operators.relational import _cents
 from ..sources.catalog import load_table
 from .stateful import running_user_profile
 from .wordcount_stream import _fresh_workdir, spill_chunks
-
-# (appId, sf_dir) -> {"profile": dir, "hourly": dir, "dedup": dir}
-_DRAIN_CACHE: dict[tuple[str, str], dict[str, str]] = {}
 
 # True while pin_shuffle_partitions() holds the session conf. The two
 # pool-drain helpers each save/set/restore shuffle.partitions around
@@ -64,29 +62,8 @@ def pin_shuffle_partitions(spark: SparkSession, n: str = "8"):
 
 def reset() -> None:
     """Forget completed drains (bench.py calls this between passes so
-    each pass times a real concurrent drain, not a sink read-back).
-    Also clears the append-mode session-window drain memo."""
-    _DRAIN_CACHE.clear()
-    from . import join_stream, stateful, windowed_stream
-
-    windowed_stream.reset_session_windows()
-    windowed_stream.reset_sliding_windows()
-    join_stream.reset_join_stream()
-    stateful.reset_tws()
-    from . import enrich_stream, outer_join_stream, upsert_stream
-
-    upsert_stream.reset_upsert()
-    enrich_stream.reset_enrich()
-    outer_join_stream.reset_outer_join()
-    from . import psi_stream
-
-    psi_stream.reset_psi_stream()
-    from . import late_stream
-
-    late_stream.reset_late_stream()
-    from ..sources import chunktext
-
-    chunktext.reset_stream_wc()
+    each pass times a real concurrent drain, not a sink read-back)."""
+    clear_drain_memos()
 
 
 def drain_round7_streams(spark: SparkSession, sf_dir: str) -> None:
@@ -113,32 +90,22 @@ def drain_round7_streams(spark: SparkSession, sf_dir: str) -> None:
         windowed_stream,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    starters = []
     # the pool grew in round 10: the PSI monitor drains concurrently
     # with the four round-7 entries (same memo/reset discipline)
-    if key not in psi_stream._PSI_CACHE:
-        starters.append((psi_stream._start_psi, psi_stream._PSI_CACHE))
-    if key not in enrich_stream._ENRICH_CACHE:
-        starters.append((enrich_stream._start_enrich, enrich_stream._ENRICH_CACHE))
-    if key not in windowed_stream._SLIDING_CACHE:
-        starters.append(
-            (windowed_stream._start_sliding, windowed_stream._SLIDING_CACHE)
+    starters = [
+        (start, memo)
+        for start, memo in (
+            (psi_stream._start_psi, psi_stream._psi_drain),
+            (enrich_stream._start_enrich, enrich_stream._enrich_drain),
+            (windowed_stream._start_sliding, windowed_stream._sliding_drain),
+            (join_stream._start_join, join_stream._join_drain),
+            (
+                outer_join_stream._start_outer_join,
+                outer_join_stream._outer_join_drain,
+            ),
         )
-    if key not in join_stream._JOIN_CACHE:
-        starters.append((join_stream._start_join, join_stream._JOIN_CACHE))
-    if key not in outer_join_stream._OUTER_CACHE:
-        starters.append(
-            (outer_join_stream._start_outer_join, outer_join_stream._OUTER_CACHE)
-        )
-    # the round-14 late-data audit joins the pool (round 13): its
-    # ~5 s 6-micro-batch drain overlaps the siblings instead of
-    # paying a solo line — gated off until the entry registers so
-    # the __drain__ line never pays for an unconsumed drain
-    from . import late_stream
-
-    if late_stream.POOL_ENABLED and key not in late_stream._LATE_CACHE:
-        starters.append((late_stream._start_late, late_stream._LATE_CACHE))
+        if memo.peek(spark, sf_dir) is None
+    ]
     if not starters:
         return
 
@@ -154,24 +121,22 @@ def drain_round7_streams(spark: SparkSession, sf_dir: str) -> None:
         spark.conf.set("spark.sql.shuffle.partitions", "8")
     started = []
     try:
-        for start, cache in starters:
-            started.append((start(spark, sf_dir), cache))
-        for (q, _work, _sink), _cache in started:
+        for start, memo in starters:
+            started.append((start(spark, sf_dir), memo))
+        for (q, _work, _sink), _memo in started:
             q.awaitTermination()
     finally:
         if not pinned:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    for (q, work, sink), cache in started:
+    for (q, work, sink), memo in started:
         shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-        cache[key] = sink
+        memo.seed(spark, sf_dir, value=sink)
 
 
+@session_memo(drain=True)
 def drain_event_streams(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DRAIN_CACHE.get(key)
-    if hit is not None:
-        return hit
-
+    """Drain the three event streams concurrently; returns
+    {"profile": dir, "hourly": dir, "dedup": dir}."""
     work = _fresh_workdir("shared_events", sf_dir)
     dirs = {
         name: os.path.join(work, name)
@@ -303,6 +268,4 @@ def drain_event_streams(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     for name in ("profile", "hourly", "dedup"):
         shutil.rmtree(os.path.join(work, f"ckpt_{name}"), ignore_errors=True)
-
-    _DRAIN_CACHE[key] = dirs
     return dirs

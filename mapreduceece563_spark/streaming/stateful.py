@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..cachemgr import session_memo
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType(), False),
@@ -174,19 +176,9 @@ ROCKSDB_PROVIDER = (
 )
 
 
-# (appId, sf_dir) -> emissions dir
-_TWS_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_tws() -> None:
-    _TWS_CACHE.clear()
-
-
+@session_memo(drain=True)
 def _tws_drain(spark, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TWS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """Drain the TWS profile stream; returns the emissions dir."""
     import os
     import shutil
 
@@ -260,7 +252,6 @@ def _tws_drain(spark, sf_dir: str) -> str:
                 "spark.sql.streaming.stateStore.providerClass", prev_provider
             )
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _TWS_CACHE[key] = sink
     return sink
 
 

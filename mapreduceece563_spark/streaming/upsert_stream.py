@@ -36,20 +36,14 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cachemgr import session_memo
 from ..sources.catalog import load_table
 from .wordcount_stream import _fresh_workdir, spill_chunks
-
-# (applicationId, sf_dir) -> target table directory
-_UPSERT_CACHE: dict[tuple[str, str], str] = {}
 
 TARGET_SCHEMA = (
     "user_id BIGINT, n_events BIGINT, value_cents BIGINT,"
     " last_ts TIMESTAMP, last_type STRING, last_cents BIGINT"
 )
-
-
-def reset_upsert() -> None:
-    _UPSERT_CACHE.clear()
 
 
 def _read_target(spark: SparkSession, root: str) -> DataFrame | None:
@@ -132,11 +126,9 @@ def _merge_batch(
         fh.write(str(batch_id))
 
 
+@session_memo(drain=True)
 def _upsert_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _UPSERT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """Drain the upsert stream; returns the target table directory."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
@@ -171,7 +163,6 @@ def _upsert_drain(spark: SparkSession, sf_dir: str) -> str:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _UPSERT_CACHE[key] = root
     return root
 
 

@@ -90,80 +90,76 @@ def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 import os
 import shutil
 
+from ..cachemgr import session_memo
 from ..sources.catalog import load_table
-
-# (appId, sf_dir) -> finalized-sessions partials dir
-_SESSION_WIN_CACHE: dict[tuple[str, str], str] = {}
-# (appId, sf_dir) -> src chunk dir. Kept OUT of reset(): the layout
-# is deterministic input data (like spill_chunks), so a bench pass
-# re-times the DRAIN, not the fixture write (~6 s of scans at sf0.1).
-_SESSION_SRC_CACHE: dict[tuple[str, str], str] = {}
 
 SESSION_SENTINELS = ("2030-01-01 00:00:00", "2030-01-02 00:00:00")
 N_SESSION_CHUNKS = 4
 
 
-def reset_session_windows() -> None:
-    _SESSION_WIN_CACHE.clear()
-
-
-def _session_window_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SESSION_WIN_CACHE.get(key)
-    if hit is not None:
-        return hit
+# The src chunk layout is not a drain memo: it is deterministic input
+# data (like spill_chunks), so a bench pass re-times the DRAIN, not the
+# fixture write (~6 s of scans at sf0.1).
+@session_memo
+def _session_window_src(spark: SparkSession, sf_dir: str) -> str:
     from .wordcount_stream import _fresh_workdir
 
-    work = _fresh_workdir("session_win", sf_dir)
-    sink = os.path.join(work, "sessions")
-    os.makedirs(sink, exist_ok=True)
+    src = os.path.join(_fresh_workdir("session_win_src", sf_dir), "src")
+    os.makedirs(src, exist_ok=True)
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
+    # Harness setup (not a query path): one 1-row min/max action
+    # to derive the chunk boundaries for the time-ordered replay.
+    bounds = ev.agg(
+        F.unix_micros(F.min("ts")).alias("lo"),
+        F.unix_micros(F.max("ts")).alias("hi"),
+    ).first()
+    lo, hi = bounds["lo"], bounds["hi"]
+    # Replay order is load-bearing for the watermark (see
+    # join_stream's module docstring); assign strictly increasing
+    # mtimes per chunk so coarse filesystem timestamps can't tie
+    # and reorder the sequential writes.
+    from .wordcount_stream import ReplayOrder
 
-    src = _SESSION_SRC_CACHE.get(key)
-    if src is None:
-        src = os.path.join(_fresh_workdir("session_win_src", sf_dir), "src")
-        os.makedirs(src, exist_ok=True)
-        ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-        # Harness setup (not a query path): one 1-row min/max action
-        # to derive the chunk boundaries for the time-ordered replay.
-        bounds = ev.agg(
-            F.unix_micros(F.min("ts")).alias("lo"),
-            F.unix_micros(F.max("ts")).alias("hi"),
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-        # Replay order is load-bearing for the watermark (see
-        # join_stream's module docstring); assign strictly increasing
-        # mtimes per chunk so coarse filesystem timestamps can't tie
-        # and reorder the sequential writes.
-        from .wordcount_stream import ReplayOrder
-
-        order = ReplayOrder(src)
-        if lo is not None:
-            span = max(1, (hi - lo) + 1)
-            us = F.unix_micros(F.col("ts"))
-            for k in range(N_SESSION_CHUNKS):
-                a = lo + (span * k) // N_SESSION_CHUNKS
-                b = lo + (span * (k + 1)) // N_SESSION_CHUNKS
-                (
-                    ev.filter((us >= a) & (us < b))
-                    .coalesce(1)
-                    .write.mode("append")
-                    .parquet(src)
-                )
-                order.mark(src)
-        for s_ts in SESSION_SENTINELS:
+    order = ReplayOrder(src)
+    if lo is not None:
+        span = max(1, (hi - lo) + 1)
+        us = F.unix_micros(F.col("ts"))
+        for k in range(N_SESSION_CHUNKS):
+            a = lo + (span * k) // N_SESSION_CHUNKS
+            b = lo + (span * (k + 1)) // N_SESSION_CHUNKS
             (
-                spark.createDataFrame(
-                    [(-1, s_ts)], "user_id BIGINT, ts STRING"
-                )
-                .select(
-                    "user_id", F.col("ts").cast("timestamp").alias("ts")
-                )
+                ev.filter((us >= a) & (us < b))
                 .coalesce(1)
                 .write.mode("append")
                 .parquet(src)
             )
             order.mark(src)
-        _SESSION_SRC_CACHE[key] = src
+    for s_ts in SESSION_SENTINELS:
+        (
+            spark.createDataFrame(
+                [(-1, s_ts)], "user_id BIGINT, ts STRING"
+            )
+            .select(
+                "user_id", F.col("ts").cast("timestamp").alias("ts")
+            )
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(src)
+        )
+        order.mark(src)
+    return src
+
+
+@session_memo(drain=True)
+def _session_window_drain(spark: SparkSession, sf_dir: str) -> str:
+    """Drain the session-window stream; returns the finalized-sessions
+    partials dir."""
+    from .wordcount_stream import _fresh_workdir
+
+    work = _fresh_workdir("session_win", sf_dir)
+    sink = os.path.join(work, "sessions")
+    os.makedirs(sink, exist_ok=True)
+    src = _session_window_src(spark, sf_dir)
 
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -200,7 +196,6 @@ def _session_window_drain(spark: SparkSession, sf_dir: str) -> str:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _SESSION_WIN_CACHE[key] = sink
     return sink
 
 
@@ -242,14 +237,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------------
 
 SLIDE_US = 7200 * 1_000_000  # 2 hours in microseconds
-
-# (appId, sf_dir) -> updates dir of the finished drain
-_SLIDING_CACHE: dict[tuple[str, str], str] = {}
-
-
-def reset_sliding_windows() -> None:
-    _SLIDING_CACHE.clear()
-
 
 def _start_sliding(spark: SparkSession, sf_dir: str):
     """Fixture + START (no await): see shared_drain.
@@ -306,15 +293,11 @@ def _start_sliding(spark: SparkSession, sf_dir: str):
     return q, work, sink
 
 
+@session_memo(drain=True)
 def _sliding_drain(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SLIDING_CACHE.get(key)
-    if hit is not None:
-        return hit
     q, work, sink = _start_sliding(spark, sf_dir)
     q.awaitTermination()
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
-    _SLIDING_CACHE[key] = sink
     return sink
 
 

@@ -16,6 +16,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
+    # The session default heap (48g) is larger than a small test box's
+    # RAM: G1 keeps growing the heap instead of collecting, and a
+    # full run reaches ~13 GB RSS until the kernel OOM-kills the JVM
+    # mid-suite. The sf0.001 tables fit in 4g, the benchmark's heap.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     spark = get_spark("mapreduceece563_spark-tests", cpus=8, shuffle_partitions=8)
     yield spark
 

@@ -36,6 +36,18 @@ def test_partitioned_write_prunes_partitions(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_spread_gate_fails_closed_on_unlistable_paths(spark, tmp_path):
+    """The load_table(spread=True) gate fires only on a scan it can
+    see is narrow: a path with no listable parquet file (empty or
+    missing directory, as on an object store) is NOT narrow, while the
+    single-file sf0.001 documents table keeps its narrow verdict."""
+    from mapreduceece563_spark.sources.catalog import _scan_is_narrow
+
+    assert _scan_is_narrow(spark, str(tmp_path), "documents") is False
+    assert _scan_is_narrow(spark, str(tmp_path / "missing"), "documents") is False
+    assert _scan_is_narrow(spark, SF_DIR, "documents") is True
+
+
 def test_bucketed_join_has_no_exchange(spark):
     """Two tables bucketed on the join key must sort-merge join with
     ZERO Exchange operators — the co-located join that pre-bucketing

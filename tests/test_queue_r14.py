@@ -55,8 +55,7 @@ def test_streaming_psi_ran_multiple_batches(spark):
     from mapreduceece563_spark.streaming import psi_stream as ps
 
     ps.streaming_psi_monitor(spark, SF_DIR).collect()
-    key = (spark.sparkContext.applicationId, SF_DIR)
-    sink = ps._PSI_CACHE[key]
+    sink = ps._psi_drain.peek(spark, SF_DIR)
     batches = [d for d in os.listdir(sink) if d.startswith("batch_id=")]
     assert len(batches) >= 2, batches
 

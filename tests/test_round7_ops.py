@@ -234,7 +234,7 @@ def test_streaming_sliding_windows_matches_batch_oracle(spark, duck):
     from mapreduceece563_spark.sources.catalog import load_table
     from mapreduceece563_spark.streaming import windowed_stream as ws
 
-    ws.reset_sliding_windows()
+    ws._sliding_drain.clear()
     sdf = ws.streaming_sliding_windows(spark, SF_DIR)
     assert_frames_match(
         sdf,
@@ -394,7 +394,7 @@ def test_streaming_outer_join_matches_batch_left_join(spark, duck):
     from mapreduceece563_spark.sources.catalog import load_table
     from mapreduceece563_spark.streaming import outer_join_stream as oj
 
-    oj.reset_outer_join()
+    oj._outer_join_drain.clear()
     sdf = oj.streaming_outer_join_attribution(spark, SF_DIR)
     assert_frames_match(
         sdf,

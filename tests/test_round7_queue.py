@@ -12,7 +12,7 @@ make the "similarity join avoids the cross product" demonstration
 vacuous. The operator runs in 3-word-shingle TF-IDF space for the
 same reason (the unigram space is 31-dimensional here and defeats
 prefix pruning outright — measured numbers in
-operators/ngrams.py::_SHINGLE_TF_CACHE)."""
+operators/ngrams.py::_shingle_tf_stage)."""
 
 from __future__ import annotations
 
@@ -54,17 +54,16 @@ def test_bloom_join_prune_matches_oracle_no_false_negatives(spark, duck):
 def test_ivm_refresh_equals_full_recompute(spark, duck):
     from mapreduceece563_spark.operators import mining as mn
 
-    mn.reset_ivm()
+    mn._ivm_base_view.clear()
     sdf = mn.ivm_incremental_agg(spark, SF_DIR)
     assert_frames_match(
         sdf, duck.execute(mn.IVM_INCREMENTAL_SQL), ctx="ivm_incremental_agg"
     )
     # the second refresh must reuse the materialized base view, not
     # rebuild it (the memo is the "stored view" the refresh maintains)
-    key = (spark.sparkContext.applicationId, SF_DIR)
-    first_path = mn._IVM_VIEW_CACHE[key]
+    first_path = mn._ivm_base_view.peek(spark, SF_DIR)
     mn.ivm_incremental_agg(spark, SF_DIR)
-    assert mn._IVM_VIEW_CACHE[key] == first_path
+    assert mn._ivm_base_view.peek(spark, SF_DIR) == first_path
 
 
 def test_session_concurrency_matches_oracle_and_invariants(spark, duck):
@@ -212,7 +211,7 @@ def test_streaming_static_enrichment_matches_batch_oracle(spark, duck):
     from mapreduceece563_spark.sources.catalog import load_table
     from mapreduceece563_spark.streaming import enrich_stream as es
 
-    es.reset_enrich()
+    es._enrich_drain.clear()
     sdf = es.streaming_static_enrichment(spark, SF_DIR)
     assert_frames_match(
         sdf, duck.execute(es.STREAMING_ENRICH_SQL), ctx="stream_enrich"

@@ -256,10 +256,7 @@ def test_chunk_fixture_unsorted_vintage_fallback(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mapreduceece563_spark.sources.chunktext import (
-        _CHUNK_CACHE,
-        chunked_corpus_dir,
-    )
+    from mapreduceece563_spark.sources.chunktext import chunked_corpus_dir
 
     ids = [7, 2, 9, 0, 5, 1, 8, 3, 6, 4]
     pq.write_table(
@@ -283,7 +280,7 @@ def test_chunk_fixture_unsorted_vintage_fallback(tmp_path):
         assert got["chunk_7.txt"] == ["doc 7"]
         assert sum(len(v) for v in got.values()) == len(ids)
     finally:
-        _CHUNK_CACHE.pop(str(tmp_path), None)
+        chunked_corpus_dir.discard(str(tmp_path))
 
 
 def test_arrow_batching_splits_large_chunks(tmp_path):

@@ -62,7 +62,7 @@ def main() -> None:
     spark.streams.addListener(Cap())
 
     for i in range(args.runs):
-        stateful.reset_tws()
+        stateful._tws_drain.clear()
         t0 = time.perf_counter()
         sink = stateful._tws_drain(spark, args.sf_dir)
         wall = round(time.perf_counter() - t0, 3)
